@@ -1,11 +1,15 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array of numbers; elements
+are cast to double before any arithmetic).
 
 * brute-force cosine top-k — the exact baseline: a broadcasted query set
   against the corpus, JVM-side dot products via zip_with/aggregate (no
   Python boundary), windowed rank for top-k.
 * LSH-bucketed variant (random-hyperplane signs) — the scale path: restrict
   the candidate set to matching sign-buckets before exact re-scoring, so
-  cost is O(rows × bucket_size) instead of O(rows × queries).
+  cost is O(rows × bucket_size) instead of O(rows × queries).  The band
+  keys and the per-row norms come from ONE scalar Arrow UDF
+  (``_band_keys``), a numpy replay of the JVM ``hyperplane_signs`` /
+  ``norm`` folds bit for bit; everything after it stays JVM-side.
 """
 
 from __future__ import annotations
@@ -62,7 +66,11 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
 
 def hyperplane_signs(vec: Column, planes) -> Column:
-    """Sign bits against fixed hyperplanes -> bucket key string."""
+    """Sign bits against fixed hyperplanes -> bucket key string.
+
+    The JVM definition of an LSH band key: _banded_buckets computes the
+    same bits in its Arrow kernel (``_band_keys``), and the tests hold
+    the two equal bit for bit."""
     bits = [
         F.when(
             F.aggregate(
@@ -158,17 +166,123 @@ def _banded_buckets(df: DataFrame, bands, id_col: str, vec_col: str,
                     id_alias: str, vec_alias: str) -> DataFrame:
     """One row per (input row, band) with the band's sign-bucket key and
     the vector's precomputed norm (column ``<vec_alias>_n``) — norms are
-    evaluated once per row here, never per candidate pair downstream."""
+    evaluated once per row here, never per candidate pair downstream.
+
+    Keys and norm come from one scalar Arrow UDF over
+    ``cast(v as array<double>)`` (the kernel is ``_band_keys``; the
+    planes travel as one float64 (planes, dim) matrix in its closure).
+    Its struct result is selected into ONE column before the posexplode:
+    read straight off the UDF call, ``v_n`` and ``keys`` would each plan
+    their own ArrowEvalPython node, with its own Python workers, and the
+    band work would run once per node.  All planes must share one
+    length (ValueError otherwise)."""
+    import numpy as np
+    from pyspark.sql.functions import arrow_udf
+
+    planes = [[float(x) for x in p] for band in bands for p in band]
+    dims = {len(p) for p in planes}
+    if len(dims) > 1:
+        raise ValueError(f"hyperplanes differ in length: {sorted(dims)}")
+    P = np.array(planes, dtype=np.float64).reshape(
+        len(planes), dims.pop() if dims else 0)
+    starts = np.cumsum([0] + [len(band) for band in bands])
+
+    @arrow_udf("struct<v_n double, keys array<string>>")
+    def _keys(vecs):
+        return _band_keys(vecs, P, starts)
+
     n_alias = vec_alias + "_n"
-    return df.select(
+    keyed = df.select(
         F.col(id_col).alias(id_alias),
         F.col(vec_col).alias(vec_alias),
-        norm(F.col(vec_col)).alias(n_alias),
-        F.explode(F.array(*[
-            F.struct(F.lit(bi).alias("band"),
-                     hyperplane_signs(F.col(vec_col), band).alias("bucket"))
-            for bi, band in enumerate(bands)])).alias("bk"),
-    ).select(id_alias, vec_alias, n_alias, "bk.band", "bk.bucket")
+        _keys(F.col(vec_col).cast("array<double>")).alias("_bk"))
+    return keyed.select(
+        id_alias, vec_alias, F.col("_bk.v_n").alias(n_alias),
+        F.posexplode("_bk.keys").alias("band", "bucket"))
+
+
+def _decode_vectors(arr):
+    """Arrow list<double> -> (offs, lens, invalid, V): int64 row offsets
+    into the flat float64 values ``V``, row lengths, and a mask of rows
+    the JVM folds turn null (a NULL vector or a NULL element).  NULL
+    elements read as NaN in ``V``; callers must honour ``invalid``."""
+    import numpy as np
+    import pyarrow as pa
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    offs = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    lens = np.diff(offs)
+    invalid = (arr.is_null().to_numpy(zero_copy_only=False)
+               if arr.null_count else np.zeros(len(arr), dtype=bool))
+    vals = arr.values
+    if vals.null_count:
+        elem_null = vals.is_null().to_numpy(zero_copy_only=False)
+        cs = np.concatenate(([0], np.cumsum(elem_null)))
+        invalid = invalid | ((cs[offs[1:]] - cs[offs[:-1]]) > 0)
+    return offs, lens, invalid, vals.to_numpy(zero_copy_only=False)
+
+
+def _band_keys(vecs, P, starts):
+    """Norms and band keys of one Arrow batch of vectors, replaying the
+    JVM expressions ``norm(v)`` and ``hyperplane_signs(v, band)`` bit for
+    bit against the (planes, dim) matrix ``P``; band b owns planes
+    ``starts[b]:starts[b+1]``.
+
+    * Each fold runs in dim order, ``acc = acc + x_t * p_t`` from 0.0 —
+      a float64 multiply then a float64 add per step, no BLAS, matmul or
+      FMA, exactly the zip_with/aggregate order.
+    * A bit is '1' iff ``acc >= 0`` or ``acc`` is NaN (Spark orders NaN
+      above every number).
+    * A NULL vector or NULL element gives a null norm and all-'0' bits
+      (the null fold fails ``>= 0``); a length other than ``dim`` gives
+      '0' bits (zip_with pads with null) while the norm is still the
+      self-fold over the row's own length — 0.0 for an empty vector."""
+    import numpy as np
+    import pyarrow as pa
+
+    offs, lens, invalid, V = _decode_vectors(vecs)
+    n = len(lens)
+    m, dim = P.shape
+    vn = np.zeros(n, dtype=np.float64)
+    bits = np.zeros((n, m), dtype=bool)
+    ok = ~invalid
+    if n and ok.all() and (lens == lens[0]).all():
+        # uniform clean batch: zero-copy reshape of the flat values
+        ln = int(lens[0])
+        classes = [(slice(None), ln, V[offs[0]:offs[-1]].reshape(n, ln))]
+    else:
+        # ragged or null-bearing batch: one gather per length class
+        classes = []
+        for ln in np.unique(lens[ok]).tolist():
+            rows = np.flatnonzero(ok & (lens == ln))
+            classes.append(
+                (rows, ln, V[offs[rows][:, None] + np.arange(ln)]))
+    for rows, ln, X in classes:
+        # column-major copy: each fold step reads one contiguous column
+        # (strided column reads of the row-major batch measured 4x slower)
+        X = np.asfortranarray(X)
+        with np.errstate(over="ignore", invalid="ignore"):
+            # inf/NaN data are values here, exactly as in the JVM fold
+            vn[rows] = np.sqrt(_fold_dot(X, X))
+            if ln == dim:
+                a = np.zeros((m, X.shape[0]), dtype=np.float64)
+                for t in range(ln):
+                    a = a + P[:, t, None] * X[:, t]
+                bits[rows] = ((a >= 0) | np.isnan(a)).T
+    chars = np.where(bits, ord("1"), ord("0")).astype(np.uint8)
+    # row i's keys are consecutive slices of its m chars, one per band
+    n_bands = len(starts) - 1
+    key_offs = np.append(
+        (np.arange(n, dtype=np.int64)[:, None] * m + starts[:-1]).ravel(),
+        n * m).astype(np.int32)
+    keys = pa.StringArray.from_buffers(
+        n * n_bands, pa.py_buffer(key_offs), pa.py_buffer(chars.tobytes()))
+    return pa.StructArray.from_arrays(
+        [pa.array(vn, pa.float64(), mask=invalid if invalid.any() else None),
+         pa.ListArray.from_arrays(
+             pa.array(np.arange(n + 1, dtype=np.int32) * n_bands), keys)],
+        names=["v_n", "keys"])
 
 
 def _bucket_pair_scores(it):
@@ -205,19 +319,7 @@ def _bucket_pair_scores(it):
     vns = vn_col.to_numpy(zero_copy_only=False)        # nulls -> NaN
     vn_null = (vn_col.is_null().to_numpy(zero_copy_only=False)
                if vn_col.null_count else np.zeros(n, dtype=bool))
-    v = tbl.column("v")
-    if isinstance(v, pa.ChunkedArray):
-        v = v.combine_chunks()
-    offs = v.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    lens = np.diff(offs)
-    vals = v.values
-    invalid = (v.is_null().to_numpy(zero_copy_only=False)
-               if v.null_count else np.zeros(n, dtype=bool))
-    if vals.null_count:
-        elem_null = vals.is_null().to_numpy(zero_copy_only=False)
-        cs = np.concatenate(([0], np.cumsum(elem_null)))
-        invalid = invalid | ((cs[offs[1:]] - cs[offs[:-1]]) > 0)
-    V = vals.to_numpy(zero_copy_only=False)            # nulls -> NaN
+    offs, lens, invalid, V = _decode_vectors(tbl.column("v"))
 
     # (band, bucket) run boundaries — rows arrive sorted by both
     band = tbl.column("band")
@@ -334,6 +436,13 @@ def embedding_near_dups(corpus: DataFrame, threshold: float = 0.9,
     recall is tunable via bands.  Degenerate buckets are capped like the
     dedup joins.
 
+    The banded relation (band keys plus per-row norms, one scalar Arrow
+    UDF — see _banded_buckets) is materialized by _track's eager
+    localCheckpoint, so with ``persist=True`` the banding runs once,
+    inside that checkpoint job, and the re-score plans below read the
+    checkpoint — they hold no Python evaluation unless the Arrow
+    re-score engages.
+
     r8: when the materialized banded relation reaches
     ``arrow_rescore_bytes`` (default 64 MiB; None = never, 0 = always;
     measured from the checkpoint blocks' storage info — no extra job,
@@ -356,8 +465,8 @@ def embedding_near_dups(corpus: DataFrame, threshold: float = 0.9,
     bucketed = _banded_buckets(_widen(corpus), bands, id_col, vec_col,
                                "id", "v")
     if persist:
-        # 3 consumers (cap agg + both join sides): cache so the hyperplane
-        # sign folds run once, not three times (same bounded-registry
+        # 3 consumers (cap agg + both join sides): checkpoint so the
+        # banding kernel runs once, not three times (same bounded-registry
         # pattern as dedup.py — see dedup._track / unpersist_tracked)
         from .dedup import _track
 

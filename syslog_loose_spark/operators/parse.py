@@ -8,10 +8,10 @@ no-backtracking-within-an-alternative execution, which is what makes one
 regex pass per protocol semantically equal to the combinator sequence.
 
 Exposed as:
-  * ``parse_tokenized(df, cfg)``   — mapInPandas over the tokenized input
-    table (detokenize + parse in one Arrow pass; the job's only
-    JVM→Python boundary)
-  * ``parse_syslog_udf(cfg)``      — scalar pandas_udf: string -> struct
+  * ``parse_tokenized(df, cfg)``   — one scalar ``arrow_udf`` over the
+    tokenized input table's tokens column (detokenize + parse in one
+    Arrow pass; the job's only JVM→Python boundary)
+  * ``parse_syslog_udf(cfg)``      — scalar ``arrow_udf``: string -> struct
 
 Semantics are verified row-for-row against the independent plain-Python
 oracle (syslog_loose_spark.oracle) in tests/test_parse_vectorized.py,
@@ -22,10 +22,9 @@ from __future__ import annotations
 
 import re
 from datetime import datetime, timedelta, timezone
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from ..config import (
@@ -712,41 +711,6 @@ def parse_lines(lines, raws, cfg: ParseConfig):
          c_msg[i]) = row
         c_ok[i] = True
     return cols
-
-
-def _cols_to_pdf(cols, extra: Optional[dict] = None) -> pd.DataFrame:
-    data = dict(extra or {})
-    names = ["protocol", "version", "facility", "severity", "ts",
-             "tz_offset_seconds", "hostname", "appname", "procid_pid",
-             "procid_name", "msgid", "structured_data", "msg", "parse_ok"]
-    for name, col in zip(names, cols):
-        if name == "ts":
-            nat = np.iinfo(np.int64).min        # pandas NaT sentinel
-            ints = np.fromiter((nat if v is None else v for v in col),
-                               dtype=np.int64, count=len(col))
-            data[name] = pd.Series(ints.view("M8[us]"))
-        elif name == "structured_data":
-            # tuples map positionally onto the struct fields in Arrow and
-            # convert ~2x faster than per-element dicts
-            data[name] = pd.Series(col, dtype=object)
-        elif name in ("version",):
-            data[name] = pd.Series(col, dtype="object")
-        else:
-            data[name] = pd.Series(col, dtype=object)
-    return pd.DataFrame(data)
-
-
-def detokenize_batch(tokens_col) -> List[str]:
-    """array<int32> of UTF-8 byte values -> str, via one flat numpy buffer
-    per Arrow batch (no per-character Python)."""
-    import pyarrow as pa
-
-    arr = pa.array(tokens_col, type=pa.list_(pa.int32()))
-    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.uint8)
-    offs = arr.offsets.to_numpy(zero_copy_only=False)
-    buf = flat.tobytes()
-    return [buf[offs[j]:offs[j + 1]].decode("utf-8", "replace")
-            for j in range(len(offs) - 1)]
 
 
 _ARROW_STRUCT_TYPE = None

@@ -1,8 +1,9 @@
 """End-to-end job assembly: parse → enrich → route → aggregate, resumable.
 
 Physical profile (SURVEY §3.2/§4.4): one JVM→Python Arrow boundary (the
-parse mapInPandas), one shuffle per chunk (the salted routing repartition),
-one shuffle for the final aggregate.  Everything else is narrow or a
+parse arrow_udf), one shuffle per chunk (the routing REBALANCE, or the
+salted repartition under write_strategy="salted_repartition"), one
+shuffle for the final aggregate.  Everything else is narrow or a
 broadcast join.
 """
 

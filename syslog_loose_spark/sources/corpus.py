@@ -14,7 +14,7 @@ hot-source salting in the routing stage.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Tuple
+from typing import List, Tuple
 
 # (fixture_id, raw_line) — raw lines from the reference test suite
 # (tests/tests.rs / rfc3164.rs / timestamp.rs; see FIXTURES.md §3).
@@ -204,15 +204,6 @@ def tokenize(line: str) -> List[int]:
 
 def detokenize(tokens: List[int]) -> str:
     return bytes(t & 0xFF for t in tokens).decode("utf-8", "replace")
-
-
-def generate_rows(n_rows: int) -> Iterator[Tuple[str, List[int], int, str]]:
-    """Cycle the corpus into n_rows of (doc_id, tokens, n_tok, source)."""
-    n = len(GOLDEN_CORPUS)
-    for i in range(n_rows):
-        _, line = GOLDEN_CORPUS[i % n]
-        toks = tokenize(line)
-        yield (f"doc-{i:08d}", toks, len(toks), source_for(i))
 
 
 def corpus_line(i: int) -> str:

@@ -87,8 +87,10 @@ def test_arrow_rescore_null_and_ragged_semantics(spark):
 
 
 def test_arrow_gate_defaults_to_jvm_on_small_input(spark):
-    """Under the default gate a small corpus takes the JVM join path —
-    the declared-query plan must stay free of Python evaluation."""
+    """Under the default gate a small corpus takes the JVM join path.
+    The banding Arrow UDF runs inside _track's eager checkpoint job, so
+    the post-checkpoint re-score plan must stay free of Python
+    evaluation."""
     emb = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet").limit(100)
     base = emb.select("vec_id", F.expr(
